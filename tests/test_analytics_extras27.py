@@ -4,18 +4,9 @@ hash-match; these pin the modeling down independently)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from hivetomysql_spark.queries import queries
 from hivetomysql_spark.tables import load_table
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
-
 
 
 def test_url_parse_covers_all_events(spark, sf_dir, Q):

@@ -6,15 +6,9 @@ from __future__ import annotations
 
 import math
 
-import pytest
 
 from hivetomysql_spark.queries import queries
 from hivetomysql_spark.tables import load_table
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
 
 
 def test_spearman_bounded_and_price_tracks_quantity(spark, sf_dir, Q):

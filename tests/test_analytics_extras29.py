@@ -3,15 +3,8 @@ cannot see."""
 
 from __future__ import annotations
 
-import pytest
-
 from hivetomysql_spark.queries import queries
 from hivetomysql_spark.tables import load_table
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
 
 
 def test_naive_bayes_confusion_covers_all_docs(spark, sf_dir, Q):

@@ -3,16 +3,9 @@ cannot see."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from hivetomysql_spark.queries import queries
 from hivetomysql_spark.tables import load_table
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
 
 
 def test_kcore_every_core_node_has_degree_ge_k(spark, sf_dir, Q):

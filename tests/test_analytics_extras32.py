@@ -3,15 +3,7 @@ cannot see."""
 
 from __future__ import annotations
 
-import pytest
-
-from hivetomysql_spark.queries import queries
 from hivetomysql_spark.tables import load_table
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
 
 
 def test_bfs_histogram_accounts_for_all_nodes(spark, sf_dir, Q):

@@ -5,15 +5,8 @@ from __future__ import annotations
 
 import math
 
-import pytest
 
-from hivetomysql_spark.queries import queries
 from hivetomysql_spark.tables import load_table
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
 
 
 def test_late_data_monotone_in_delay(spark, sf_dir, Q):

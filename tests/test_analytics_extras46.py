@@ -3,16 +3,6 @@ cannot see."""
 
 from __future__ import annotations
 
-import pytest
-
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
-
 def test_hits_authority_normalized_top10(spark, sf_dir, Q):
     out = sorted(
         Q["graph_hits_authority"](spark, sf_dir).collect(),

@@ -3,15 +3,7 @@ cannot see."""
 
 from __future__ import annotations
 
-import pytest
-
 from hivetomysql_spark.operators.multimodal import phash_ppm, synthesize_ppm
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
 
 
 def test_phash_pure_fn_properties():

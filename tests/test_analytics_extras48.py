@@ -3,16 +3,6 @@ cannot see."""
 
 from __future__ import annotations
 
-import pytest
-
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
-
 def test_gbdt_rmse_monotone_decreasing(spark, sf_dir, Q):
     rows = sorted(
         Q["ml_gbdt_stumps_boost"](spark, sf_dir).collect(),

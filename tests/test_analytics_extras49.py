@@ -3,16 +3,6 @@ cannot see."""
 
 from __future__ import annotations
 
-import pytest
-
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
-
 def test_knn_one_prediction_per_query(spark, sf_dir, Q):
     rows = Q["ml_knn_classifier"](spark, sf_dir).collect()
     assert len(rows) == 25

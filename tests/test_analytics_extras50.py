@@ -5,15 +5,6 @@ from __future__ import annotations
 
 import math
 
-import pytest
-
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
 
 def test_mixture_weights_sum_to_one_and_budget_conserved(spark, sf_dir, Q):
     rows = Q["sample_mixture_epochs"](spark, sf_dir).collect()

@@ -5,13 +5,6 @@ from __future__ import annotations
 
 import pytest
 
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
 
 def test_ddsketch_honors_relative_error_guarantee(spark, sf_dir, Q):
     row = Q["agg_ddsketch_quantile_pinned"](spark, sf_dir).collect()[0]

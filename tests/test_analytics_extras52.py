@@ -7,13 +7,6 @@ import math
 
 import pytest
 
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
 
 def test_lsh_audit_accounting_identities(spark, sf_dir, Q):
     row = Q["dedup_lsh_quality_audit"](spark, sf_dir).collect()[0]

@@ -3,16 +3,6 @@ cannot see."""
 
 from __future__ import annotations
 
-import pytest
-
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
-
 def test_backfill_ranges_disjoint_and_ordered(spark, sf_dir, Q):
     rows = sorted(
         Q["incremental_backfill_planner"](spark, sf_dir).collect(),

@@ -5,13 +5,6 @@ from __future__ import annotations
 
 import pytest
 
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
 
 def test_kmeans_partitions_all_vectors(spark, sf_dir, Q):
     rows = Q["ml_kmeans_lloyd_rounds"](spark, sf_dir).collect()

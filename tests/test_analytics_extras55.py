@@ -6,13 +6,6 @@ from __future__ import annotations
 
 import pytest
 
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
 
 def test_its_aa_property_on_stable_series(spark, sf_dir, Q):
     row = Q["events_interrupted_time_series"](spark, sf_dir).collect()[0]

@@ -3,16 +3,6 @@ cannot see."""
 
 from __future__ import annotations
 
-import pytest
-
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
-
 def test_ssim_bounds_and_coverage(spark, sf_dir, Q):
     rows = Q["multimodal_video_ssim"](spark, sf_dir).collect()
     docs = {r["doc_id"] for r in rows}

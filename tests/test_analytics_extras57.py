@@ -5,13 +5,6 @@ from __future__ import annotations
 
 import pytest
 
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
 
 def test_lag_matrix_is_leakage_free(spark, sf_dir, Q):
     rows = sorted(

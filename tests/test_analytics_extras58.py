@@ -5,13 +5,6 @@ from __future__ import annotations
 
 import pytest
 
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
 
 def test_thompson_allocation_sums_to_one(spark, sf_dir, Q):
     rows = Q["ml_thompson_sampling_allocation"](spark, sf_dir).collect()

@@ -3,16 +3,6 @@ cannot see."""
 
 from __future__ import annotations
 
-import pytest
-
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
-
 def test_pitch_estimate_accuracy(spark, sf_dir, Q):
     rows = Q["multimodal_audio_pitch_estimate"](spark, sf_dir).collect()
     assert rows

@@ -3,16 +3,6 @@ cannot see."""
 
 from __future__ import annotations
 
-import pytest
-
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
-
 def test_scd2_apply_interval_discipline(spark, sf_dir, Q):
     rows = Q["incremental_scd2_apply"](spark, sf_dir).collect()
     by_key = {}

@@ -3,16 +3,6 @@ cannot see."""
 
 from __future__ import annotations
 
-import pytest
-
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
-
 def test_weibull_fit_plausible(spark, sf_dir, Q):
     row = Q["ml_weibull_survival_fit"](spark, sf_dir).collect()[0]
     assert row["n_orders"] > 100

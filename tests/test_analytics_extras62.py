@@ -5,13 +5,6 @@ from __future__ import annotations
 
 import pytest
 
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
 
 def test_phash_banding_selectivity(spark, sf_dir, Q):
     row = Q["multimodal_phash_dedup_pairs"](spark, sf_dir).collect()[0]

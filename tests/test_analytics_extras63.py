@@ -5,13 +5,6 @@ from __future__ import annotations
 
 import pytest
 
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
 
 def test_prf_accounting(spark, sf_dir, Q):
     row = Q["similarity_prf_requery"](spark, sf_dir).collect()[0]

@@ -5,13 +5,6 @@ from __future__ import annotations
 
 import pytest
 
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
 
 def test_laspeyres_base_year_is_unity(spark, sf_dir, Q):
     rows = {r["year"]: r for r in

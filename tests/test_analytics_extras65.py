@@ -3,16 +3,6 @@ cannot see."""
 
 from __future__ import annotations
 
-import pytest
-
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
-
 def test_pca2_spectral_invariants(spark, sf_dir, Q):
     row = Q["embedding_pca_second_component"](spark, sf_dir).collect()[0]
     # random near-isotropic embeddings have a FLAT spectrum; with a

@@ -3,16 +3,6 @@ cannot see."""
 
 from __future__ import annotations
 
-import pytest
-
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
-
 def test_absorption_probabilities_and_steps(spark, sf_dir, Q):
     rows = {r["start_state"]: r for r in
             Q["events_markov_absorption"](spark, sf_dir).collect()}

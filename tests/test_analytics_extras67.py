@@ -5,13 +5,6 @@ from __future__ import annotations
 
 import pytest
 
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
 
 def test_shrinkage_pulls_toward_prior(spark, sf_dir, Q):
     rows = Q["stats_dirichlet_shrinkage"](spark, sf_dir).collect()

@@ -2,16 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
-
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
-
 def test_range_bucketed_window_accounting(spark, sf_dir, Q):
     rows = Q["join_range_bucketed"](spark, sf_dir).collect()
     assert len(rows) == 40  # left semantics: every window present

@@ -3,16 +3,6 @@ cannot see."""
 
 from __future__ import annotations
 
-import pytest
-
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
-
 def test_srm_flags_false_on_fair_split(spark, sf_dir, Q):
     rows = Q["ml_ab_srm_check"](spark, sf_dir).collect()
     assert len(rows) == 5

@@ -3,16 +3,6 @@ cannot see."""
 
 from __future__ import annotations
 
-import pytest
-
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
-
 def test_edge_energy_detects_flat_vs_noise():
     from hivetomysql_spark.operators.multimodal import (
         decode_ppm,

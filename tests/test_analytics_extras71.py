@@ -5,13 +5,6 @@ from __future__ import annotations
 
 import pytest
 
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
 
 def test_count_sketch_accuracy(spark, sf_dir, Q):
     rows = Q["agg_count_sketch_signed"](spark, sf_dir).collect()

@@ -3,16 +3,6 @@ cannot see."""
 
 from __future__ import annotations
 
-import pytest
-
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
-
 def test_gap_sweep_monotone(spark, sf_dir, Q):
     rows = {r["gap_setting"]: r for r in
             Q["events_session_gap_sweep"](spark, sf_dir).collect()}

@@ -5,13 +5,6 @@ from __future__ import annotations
 
 import pytest
 
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
 
 def test_rich_club_densities(spark, sf_dir, Q):
     row = Q["graph_rich_club"](spark, sf_dir).collect()[0]

@@ -3,16 +3,6 @@ cannot see."""
 
 from __future__ import annotations
 
-import pytest
-
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
-
 def test_release_gate_all_checks_present_and_pass(spark, sf_dir, Q):
     rows = {r["check_name"]: r for r in
             Q["pipeline_release_gate"](spark, sf_dir).collect()}

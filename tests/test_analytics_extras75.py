@@ -3,16 +3,6 @@ cannot see."""
 
 from __future__ import annotations
 
-import pytest
-
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
-
 def test_peak_cycle_accounting(spark, sf_dir, Q):
     row = Q["window_peak_cycle_length"](spark, sf_dir).collect()[0]
     assert row["n_peaks"] >= 2

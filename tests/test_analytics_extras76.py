@@ -3,16 +3,6 @@ cannot see."""
 
 from __future__ import annotations
 
-import pytest
-
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
-
 def test_aes_roundtrip_total(spark, sf_dir, Q):
     row = Q["func_aes_roundtrip"](spark, sf_dir).collect()[0]
     assert row["n_rows"] > 0

@@ -3,16 +3,6 @@ cannot see."""
 
 from __future__ import annotations
 
-import pytest
-
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
-
 def test_cohens_d_aa_null_and_corrections(spark, sf_dir, Q):
     rows = Q["stats_cohens_d"](spark, sf_dir).collect()
     assert len(rows) == 5

@@ -3,16 +3,6 @@ cannot see."""
 
 from __future__ import annotations
 
-import pytest
-
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
-
 def test_minmax_hits_both_bounds_per_group(spark, sf_dir, Q):
     rows = Q["feature_minmax_scaling"](spark, sf_dir).collect()
     assert rows

@@ -3,16 +3,6 @@ cannot see."""
 
 from __future__ import annotations
 
-import pytest
-
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
-
 def test_ljung_box_cumulative_structure(spark, sf_dir, Q):
     rows = sorted(
         Q["stats_ljung_box"](spark, sf_dir).collect(),

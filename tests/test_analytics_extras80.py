@@ -3,16 +3,6 @@ cannot see."""
 
 from __future__ import annotations
 
-import pytest
-
-from hivetomysql_spark.queries import queries
-
-
-@pytest.fixture(scope="module")
-def Q():
-    return queries()
-
-
 def test_powerlaw_fit_shape(spark, sf_dir, Q):
     row = Q["graph_degree_powerlaw_fit"](spark, sf_dir).collect()[0]
     assert row["n_nodes"] > 0

@@ -101,3 +101,28 @@ def test_emit_writes_low_core_record_beside_script(tmp_path, monkeypatch, capsys
     parsed = json.loads(out_lines[-1])
     assert parsed["queries"] == payload["queries"]
     assert parsed["cpus"] == 8
+
+
+def test_zero_probe_still_produces_the_record(tmp_path, monkeypatch, capsys):
+    calib = {
+        "start": {"py_sha_sec": 0.02, "jvm_sum_sec": 0.0},
+        "end": {"py_sha_sec": 0.02, "jvm_sum_sec": 0.08},
+    }
+    norm, normalized = bench.probe_normalized({"query_000": 0.1}, calib)
+    assert (norm, normalized) == (0.0, {})
+    payload = _fake_payload()
+    payload.update(calib=calib, jvm_probe_geomean=norm,
+                   queries_normalized=normalized)
+    monkeypatch.setattr(bench.os.path, "dirname", lambda _p: str(tmp_path))
+    bench.emit_record_and_summary(payload)
+    assert (tmp_path / "BENCH_LOCAL.json").exists()
+    parsed = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert parsed == bench.compact_summary(payload)
+    assert parsed["queries"] == payload["queries"]
+
+
+def test_probe_normalized_divides_by_the_probe_geomean():
+    calib = {"start": {"jvm_sum_sec": 0.04}, "end": {"jvm_sum_sec": 0.16}}
+    norm, normalized = bench.probe_normalized({"a": 0.8, "b": 0.16}, calib)
+    assert abs(norm - 0.08) < 1e-12
+    assert normalized == {"a": 10.0, "b": 2.0}

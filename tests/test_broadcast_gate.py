@@ -4,7 +4,7 @@
 An explicit broadcast hint is a promise the frame stays
 memory-bounded at ANY scale — AQE never gets to fall back, so a
 data-sized hinted frame is an OOM at 100 TB, not a slow join. The
-r10 audit (``tools/broadcast_audit.py``, SCALING.md round 10) found
+r10 audit (``python tools/scale_audit.py broadcast``, SCALING.md round 10) found
 22 such frames (full customer/part tables, threshold-only hot-key
 sets, O(N/64) offset frames) and removed or bounded every one. This
 gate repeats the measurement on every pytest run at the cheap
@@ -18,25 +18,20 @@ without being a memory risk).
 Known saturating frames are exempted with the bound that caps them;
 an exemption without a real cap is a bug in this table, not a pass.
 
-Expensive (~minutes: two plan-builds plus one count per hinted frame
-per scale), so it runs as one looping test like the plan-budget and
-window-bounds gates.
+The frames are captured and counted by the ``broadcast`` probe of
+``tools/scale_audit.py`` inside the session-scoped ``scale_capture``
+fixture (one registry build per scale, shared by all slow gates).
 """
 
 from __future__ import annotations
 
-import os
-import sys
 import pytest
+import scale_audit as S
+from conftest import SCALE_BIG as BIG, SCALE_SMALL as SMALL
 # r14 (verdict r13 #2): registry-wide measured audit — deselected from
 # the default (driver-verify) tier; run with -m "slow or not slow".
 pytestmark = pytest.mark.slow
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(ROOT, "tools"))
-
-SMALL = "/root/testdata/sf0.001"
-BIG = "/root/testdata/sf0.01"
 RATIO_MAX = 3.0
 ABS_FLOOR = 1000  # rows at BIG below which growth is moot
 
@@ -57,14 +52,9 @@ SATURATING_OK = {
 }
 
 
-def test_no_data_sized_explicit_broadcasts(spark):
-    import broadcast_audit as B
-
-    import __spark_entry__ as m
-
-    names = sorted(m.queries())
-    a = B.capture_counts(spark, SMALL, names, verbose=False)
-    b = B.capture_counts(spark, BIG, names, verbose=False)
+def test_no_data_sized_explicit_broadcasts(scale_capture):
+    a = scale_capture[SMALL]["broadcast"]
+    b = scale_capture[BIG]["broadcast"]
 
     violations = []
     for name in sorted(set(a) & set(b)):
@@ -89,8 +79,8 @@ def test_no_data_sized_explicit_broadcasts(spark):
                         f"documented saturation bound ({cap[1]})"
                     )
                 continue
-            ratio = (y / x) if x else float(y > ABS_FLOOR) * 99.0
-            if ratio > RATIO_MAX and y > ABS_FLOOR:
+            if S.grows(x, y, RATIO_MAX, ABS_FLOOR):
+                ratio = S.growth(x, y)
                 violations.append(
                     f"{name}[{i}]: hinted broadcast frame grew "
                     f"{x} → {y} rows ({ratio:.1f}×) across a 10× data "

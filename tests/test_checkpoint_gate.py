@@ -20,33 +20,28 @@ checkpointed frame must therefore be one of:
   defect even in this class (that one had a single consumer and is
   now collapsed to a per-doc max before the sweep).
 
-The capture mechanism is shared with ``tools/checkpoint_audit.py``
-(spy on the concrete classic ``DataFrame.localCheckpoint`` — Spark 4
-dispatches through the subclass). Growth compares each query's MAX
+The records come from the session-scoped ``scale_capture`` fixture
+(the ``checkpoint`` probe of ``tools/scale_audit.py``: a spy on the
+concrete classic ``DataFrame.localCheckpoint`` — Spark 4 dispatches
+through the subclass). Growth compares each query's MAX
 checkpointed frame across scales rather than call-by-call: adaptive
 fixpoints legitimately run different round counts per scale, so
 per-index alignment is meaningless for them (graph_bfs_distances ran
 24 rounds at sf0.01 and 6 at sf0.1 in the r11 audit).
 
-Expensive (~minutes: two plan-builds plus a count per checkpointed
-frame per scale), so it runs as one looping test like the broadcast
-and plan-budget gates.
+Its cost is one count per checkpointed frame per scale inside the
+shared two-scale capture.
 """
 
 from __future__ import annotations
 
-import os
-import sys
 import pytest
+import scale_audit as S
+from conftest import SCALE_BIG as BIG, SCALE_SMALL as SMALL
 # r14 (verdict r13 #2): registry-wide measured audit — deselected from
 # the default (driver-verify) tier; run with -m "slow or not slow".
 pytestmark = pytest.mark.slow
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(ROOT, "tools"))
-
-SMALL = "/root/testdata/sf0.001"
-BIG = "/root/testdata/sf0.01"
 RATIO_BOUNDED = 3.0
 RATIO_LINEAR = 12.0  # 10x data + slack; superlinear pinning fails
 ABS_FLOOR = 1000  # rows at BIG below which growth is moot
@@ -90,14 +85,9 @@ DATA_SIZED_BY_DESIGN = {
 }
 
 
-def test_no_unpriced_data_sized_checkpoints(spark):
-    import checkpoint_audit as C
-
-    import __spark_entry__ as m
-
-    names = sorted(m.queries())
-    a = C.capture(spark, SMALL, names, verbose=False)
-    b = C.capture(spark, BIG, names, verbose=False)
+def test_no_unpriced_data_sized_checkpoints(scale_capture):
+    a = scale_capture[SMALL]["checkpoint"]
+    b = scale_capture[BIG]["checkpoint"]
 
     violations = []
     for name in sorted(set(a) & set(b)):
@@ -106,11 +96,9 @@ def test_no_unpriced_data_sized_checkpoints(spark):
         if not xs or not ys:
             continue
         x, y = max(xs), max(ys)
-        if y <= ABS_FLOOR:
-            continue
-        ratio = (y / x) if x else 99.0
+        ratio = S.growth(x, y)
         if name in DATA_SIZED_BY_DESIGN:
-            if ratio > RATIO_LINEAR:
+            if S.grows(x, y, RATIO_LINEAR, ABS_FLOOR):
                 violations.append(
                     f"{name}: registered data-sized checkpoint grew "
                     f"{x} → {y} rows ({ratio:.1f}x) across a 10x data "
@@ -119,7 +107,7 @@ def test_no_unpriced_data_sized_checkpoints(spark):
                     "collapse the frame before pinning or drop the "
                     "checkpoint"
                 )
-        elif ratio > RATIO_BOUNDED:
+        elif S.grows(x, y, RATIO_BOUNDED, ABS_FLOOR):
             violations.append(
                 f"{name}: checkpointed frame grew {x} → {y} rows "
                 f"({ratio:.1f}x) across a 10x data step without a "

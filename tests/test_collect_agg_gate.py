@@ -3,9 +3,9 @@ r11 audit frozen as a regression test).
 
 An array-building aggregate materializes its whole group in ONE
 aggregation buffer — the JVM cousin of the grouped-map pandas batch.
-The r11 audit (tools/collect_agg_audit.py) measured the max group
-size feeding all 25 collect-agg call sites at sf0.01/sf0.1: worst
-absolute 2,405 rows (a per-day Kalman series, calendar-bounded and
+The r11 audit (``python tools/scale_audit.py collect_agg``) measured
+the max group size feeding all 25 collect-agg call sites at
+sf0.01/sf0.1: worst absolute 2,405 rows (a per-day Kalman series, calendar-bounded and
 FLAT across the 10x step); every site is domain-bounded (calendar
 days, 64 clusters, sessions per user) except the two registered
 classes below. This gate re-measures on every run so a future
@@ -18,18 +18,13 @@ not ratio-checked); warehouse-tier growth is fully visible.
 
 from __future__ import annotations
 
-import os
-import sys
 import pytest
+import scale_audit as S
+from conftest import SCALE_BIG as BIG, SCALE_SMALL as SMALL
 # r14 (verdict r13 #2): registry-wide measured audit — deselected from
 # the default (driver-verify) tier; run with -m "slow or not slow".
 pytestmark = pytest.mark.slow
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(ROOT, "tools"))
-
-SMALL = "/root/testdata/sf0.001"
-BIG = "/root/testdata/sf0.01"
 RATIO_BOUNDED = 3.0
 RATIO_LINEAR = 12.0
 ABS_FLOOR = 500  # max group rows at BIG below which growth is moot
@@ -52,28 +47,23 @@ DATA_SIZED_OK = {
 }
 
 
-def test_collect_agg_groups_bounded(spark):
-    import collect_agg_audit as C
-
-    import __spark_entry__ as m
-
-    names = sorted(m.queries())
-    a = C.capture(spark, SMALL, names, verbose=False)
-    b = C.capture(spark, BIG, names, verbose=False)
+def test_collect_agg_groups_bounded(scale_capture):
+    a = scale_capture[SMALL]["collect_agg"]
+    b = scale_capture[BIG]["collect_agg"]
 
     violations = []
     for name in sorted(set(a) & set(b)):
         for (keys, xm), (_k, ym) in zip(a[name], b[name]):
-            if xm < 0 or ym < 0 or ym <= ABS_FLOOR:
+            if xm < 0 or ym < 0:
                 continue
-            ratio = (ym / xm) if xm else 99.0
+            ratio = S.growth(xm, ym)
             if name in DATA_SIZED_OK:
-                if ratio > RATIO_LINEAR:
+                if S.grows(xm, ym, RATIO_LINEAR, ABS_FLOOR):
                     violations.append(
                         f"{name} keys=({keys}): registered collect group "
                         f"grew {xm} -> {ym} ({ratio:.1f}x) — SUPERLINEAR"
                     )
-            elif ratio > RATIO_BOUNDED:
+            elif S.grows(xm, ym, RATIO_BOUNDED, ABS_FLOOR):
                 violations.append(
                     f"{name} keys=({keys}): collect_list/set group grew "
                     f"{xm} -> {ym} rows ({ratio:.1f}x) across a 10x data "

@@ -11,32 +11,27 @@ crossJoin whose smaller side scales with data is O(N^2) work, which
 this repo permits only for the documented exact similarity verify
 tier (it prices the LSH tier and is capped by contract).
 
-Capture is shared with ``tools/crossjoin_audit.py`` (spy on the
+Records come from the session-scoped ``scale_capture`` fixture (the
+``crossjoin`` probe of ``tools/scale_audit.py``: a spy on the
 concrete classic ``DataFrame.crossJoin``; counts run at plan-build
 time, so the gate sweeps the full registry without executing query
 outputs). Scales: the cheap sf0.001 -> sf0.01 pair — the doc-tier
 fixtures are floored at 500 docs below sf0.01, which conveniently
 flattens the REGISTERED exact tier here while still catching a new
 unregistered data-sized side on every warehouse-tier table.
-Expensive (~minutes: two full-registry plan builds + two counts per
-crossJoin call), so it runs as one looping test like the checkpoint
-and plan-budget gates.
+Its cost is two counts per crossJoin call per scale inside the shared
+two-scale capture.
 """
 
 from __future__ import annotations
 
-import os
-import sys
 import pytest
+import scale_audit as S
+from conftest import SCALE_BIG as BIG, SCALE_SMALL as SMALL
 # r14 (verdict r13 #2): registry-wide measured audit — deselected from
 # the default (driver-verify) tier; run with -m "slow or not slow".
 pytestmark = pytest.mark.slow
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(ROOT, "tools"))
-
-SMALL = "/root/testdata/sf0.001"
-BIG = "/root/testdata/sf0.01"
 RATIO_BOUNDED = 3.0
 RATIO_LINEAR = 12.0  # registered data-sized sides must stay ~linear
 ABS_FLOOR = 500  # smaller-side rows at BIG below which growth is moot
@@ -52,14 +47,9 @@ DATA_SIZED_OK = {
 }
 
 
-def test_crossjoin_smaller_sides_bounded(spark):
-    import crossjoin_audit as C
-
-    import __spark_entry__ as m
-
-    names = sorted(m.queries())
-    a = C.capture(spark, SMALL, names, verbose=False)
-    b = C.capture(spark, BIG, names, verbose=False)
+def test_crossjoin_smaller_sides_bounded(scale_capture):
+    a = scale_capture[SMALL]["crossjoin"]
+    b = scale_capture[BIG]["crossjoin"]
 
     violations = []
     for name in sorted(set(a) & set(b)):
@@ -69,18 +59,16 @@ def test_crossjoin_smaller_sides_bounded(spark):
             if min(xl, xr) < 0 or min(yl, yr) < 0:
                 continue
             xm, ym = min(xl, xr), min(yl, yr)
-            if ym <= ABS_FLOOR:
-                continue
-            ratio = (ym / xm) if xm else 99.0
+            ratio = S.growth(xm, ym)
             if name in DATA_SIZED_OK:
-                if ratio > RATIO_LINEAR:
+                if S.grows(xm, ym, RATIO_LINEAR, ABS_FLOOR):
                     violations.append(
                         f"{name}: registered exact-tier crossJoin side "
                         f"grew {xm} -> {ym} ({ratio:.1f}x) across a 10x "
                         "step — superlinear, no longer the documented "
                         "O(docs) tier"
                     )
-            elif ratio > RATIO_BOUNDED:
+            elif S.grows(xm, ym, RATIO_BOUNDED, ABS_FLOOR):
                 violations.append(
                     f"{name}: crossJoin smaller side grew {xm} -> {ym} "
                     f"rows ({ratio:.1f}x) across a 10x data step — an "

@@ -24,21 +24,18 @@ Bounds are grouped by what bounds them:
 
 A query not in the table growing a global window FAILS (enumeration
 check); a listed query whose measured input exceeds its bound FAILS
-with the name. Expensive (~minutes: one count job per window), so it
-runs as one looping test like the registry budget gate.
+with the name. Both read the ``global_window`` probe's records (input
+rows per global window) from the session-scoped ``scale_capture``
+fixture: enumeration at sf0.001, bounds at sf0.01.
 """
 
 from __future__ import annotations
 
 import pytest
+from conftest import SCALE_BIG as SF_DIR, SCALE_SMALL
 # r14 (verdict r13 #2): registry-wide measured audit — deselected from
 # the default (driver-verify) tier; run with -m "slow or not slow".
 pytestmark = pytest.mark.slow
-
-
-from hivetomysql_spark.plans import introspect as I
-
-SF_DIR = "/root/testdata/sf0.01"
 
 # query -> max allowed input rows for EVERY global window in its
 # plan, measured at sf0.01 (see SCALING.md round 9 for the audit).
@@ -134,7 +131,11 @@ GLOBAL_WINDOW_BOUNDS: dict[str, int] = {
 }
 
 
-def test_global_window_enumeration_current(spark, sf_dir):
+def _failure(cap, name):
+    return cap["failed"].get(name) or cap["failed"].get(f"global_window:{name}")
+
+
+def test_global_window_enumeration_current(scale_capture):
     """Every registry query with ANY unpartitioned Window must be
     listed in the bounds table (plan shapes are scale-independent, so
     enumeration runs at the cheap conftest fixture scale)."""
@@ -143,14 +144,14 @@ def test_global_window_enumeration_current(spark, sf_dir):
     qmap = m.queries()
     stale = sorted(set(GLOBAL_WINDOW_BOUNDS) - set(qmap))
     assert not stale, f"bounds table lists unregistered queries: {stale}"
+    cap = scale_capture[SCALE_SMALL]
     violations = []
     for name in sorted(qmap):
-        try:
-            has_gw = bool(I.global_windows(qmap[name](spark, sf_dir)))
-        except Exception as exc:  # noqa: BLE001
-            violations.append(f"{name}: plan derivation failed: {exc!r}")
+        err = _failure(cap, name)
+        if err:
+            violations.append(f"{name}: plan derivation failed: {err}")
             continue
-        if has_gw and name not in GLOBAL_WINDOW_BOUNDS:
+        if name in cap["global_window"] and name not in GLOBAL_WINDOW_BOUNDS:
             violations.append(
                 f"{name}: NEW global (unpartitioned) window — "
                 "single-partition sort risk; reduce first (see "
@@ -162,22 +163,19 @@ def test_global_window_enumeration_current(spark, sf_dir):
     )
 
 
-def test_global_window_input_row_bounds(spark):
+def test_global_window_input_row_bounds(scale_capture):
     """MEASURED input rows of every listed query's global windows at
     sf0.01 must stay within the frozen bound — the empirical check
     the shape gate cannot provide (see module docstring)."""
-    import __spark_entry__ as m
-
-    qmap = m.queries()
+    cap = scale_capture[SF_DIR]
     violations = []
     for name in sorted(GLOBAL_WINDOW_BOUNDS):
         bound = GLOBAL_WINDOW_BOUNDS[name]
-        try:
-            df = qmap[name](spark, SF_DIR)
-            counts = I.global_window_input_counts(df)
-        except Exception as exc:  # noqa: BLE001
-            violations.append(f"{name}: measurement failed: {exc!r}")
+        err = _failure(cap, name)
+        if err:
+            violations.append(f"{name}: measurement failed: {err}")
             continue
+        counts = cap["global_window"].get(name)
         if not counts:
             # window vanished (plan improved) — harmless; the
             # enumeration test will force the table entry out when

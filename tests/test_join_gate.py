@@ -1,28 +1,32 @@
 """Equi-join site inventory gate (r11).
 
-The measured join-key audit (tools/join_key_audit.py, SCALING.md
-round 11) counted per-key multiplicities for every equi Join in the
-registry at two scales: zero hazards — every data x data join keys
-on a growing identifier, and every bounded-key join has a bounded
-small side that AQE broadcasts at runtime (no stream-side shuffle,
-nothing concentrates). This gate freezes that audited inventory
-STRUCTURALLY (plan walk, no jobs): a join site is either keyed on a
-growing identifier / a ``__rk_bucket`` two-level frame, or it must
-appear in the frozen snapshot the audit measured. A NEW or re-keyed
+The measured join-key audit (the ``join_key`` probe of
+tools/scale_audit.py, SCALING.md round 11) counted per-key
+multiplicities for every equi Join in the registry at two scales:
+zero hazards — every data x data join keys on a growing identifier,
+and every bounded-key join has a bounded small side that AQE
+broadcasts at runtime (no stream-side shuffle, nothing concentrates).
+This gate freezes that audited inventory STRUCTURALLY: a join site is
+either keyed on a growing identifier / a ``__rk_bucket`` two-level
+frame, or it must appear in the frozen snapshot the audit measured. A NEW or re-keyed
 join site outside both fails the gate — the fix is to re-run the
 measured audit and refreeze, not to edit the snapshot by hand:
 
-    python tools/join_key_audit.py          # must print 0 flagged
+    python tools/scale_audit.py join_key SMALL BIG   # must print 0 flagged
     python tests/test_join_gate.py          # refreezes the snapshot
+
+(SMALL and BIG: the sf0.001 and sf0.01 fixtures). Site identities
+(query, left keys) come from the ``join_key`` records of the
+session-scoped ``scale_capture`` fixture at SMALL.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import sys
 
 import pytest
+from conftest import SCALE_BIG as BIG, SCALE_SMALL as SMALL
 # r14 (verdict r13 #2): registry-wide measured audit — deselected from
 # the default (driver-verify) tier; run with -m "slow or not slow".
 pytestmark = pytest.mark.slow
@@ -49,51 +53,26 @@ SNAPSHOT = os.path.join(
 )
 
 
-def _walk_sites(spark, sf_dir: str):
-    """{(query, lkeys-tuple)} for every equi Join node — structural
-    only (reuses the audit's condition parser, no count jobs)."""
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(root, "tools"))
-    import join_key_audit as JK
-    import __spark_entry__ as entrymod
-
-    qmap = entrymod.queries()
-    sites = set()
-    for name in sorted(qmap):
-        df = qmap[name](spark, sf_dir)
-        stack = [df._jdf.queryExecution().optimizedPlan()]
-        while stack:
-            n = stack.pop()
-            if (
-                n.getClass().getSimpleName() == "Join"
-                and not n.condition().isEmpty()
-            ):
-                pairs, unparsed = JK._equi_pairs(
-                    n.condition().get(),
-                    JK._attr_positions(n.left()),
-                    JK._attr_positions(n.right()),
-                )
-                if pairs:
-                    sites.add((
-                        name,
-                        tuple(
-                            p["lsql"] if not p["lattr"] else p["ln"]
-                            for p in pairs
-                        ),
-                    ))
-                elif unparsed:
-                    # an equi condition the tree walk could not
-                    # attribute must surface, not vanish
-                    sites.add((name, ("<unparsed-equi-cond>",)))
-            ch = n.children()
-            for i in range(ch.size()):
-                stack.append(ch.apply(i))
-    return sites
+def _sites(cap) -> set:
+    """{(query, lkeys-tuple)} for every equi Join node in one scale's
+    capture (an unattributable equi condition surfaces as
+    ``<unparsed-equi-cond>``, not vanishes)."""
+    return {
+        (name, tuple(rec["lkeys"]))
+        for name, recs in cap["join_key"].items()
+        for rec in recs
+    }
 
 
 @pytest.fixture(scope="module")
-def current_sites(spark):
-    return _walk_sites(spark, "/root/testdata/sf0.001")
+def current_sites(scale_capture):
+    cap = scale_capture[SMALL]
+    failed = {
+        k: v for k, v in cap["failed"].items()
+        if ":" not in k or k.startswith("join_key:")
+    }
+    assert not failed, f"plan builds / join walks failed: {failed}"
+    return _sites(cap)
 
 
 def test_every_join_site_audited_or_growing(current_sites):
@@ -110,9 +89,10 @@ def test_every_join_site_audited_or_growing(current_sites):
         unknown.append(f"{name}: JOIN ON {','.join(keys)}")
     assert not unknown, (
         "equi-join sites outside the audited inventory (bounded or "
-        "unknown keys) — run `python tools/join_key_audit.py` (must "
-        "print 0 flagged), then `python tests/test_join_gate.py` to "
-        "refreeze:\n" + "\n".join(sorted(unknown))
+        f"unknown keys) — run `python tools/scale_audit.py join_key "
+        f"{SMALL} {BIG}` (must print 0 flagged), then "
+        "`python tests/test_join_gate.py` to refreeze:\n"
+        + "\n".join(sorted(unknown))
     )
 
 
@@ -126,14 +106,16 @@ def test_gate_still_sees_joins(current_sites):
 if __name__ == "__main__":
     # refreeze: record every current site (the measured audit must be
     # clean first — this script only snapshots identity, not safety)
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import scale_audit as S
+    import __spark_entry__ as entrymod
     from hivetomysql_spark.session import get_spark
 
     spark = get_spark(app_name="join_gate_freeze")
     spark.sparkContext.setLogLevel("ERROR")
-    sites = sorted(
-        (q, list(ks)) for q, ks in _walk_sites(spark, "/root/testdata/sf0.001")
+    cap = S.capture(
+        spark, SMALL, sorted(entrymod.queries()), [S.JoinKey()], verbose=False
     )
+    sites = sorted((q, list(ks)) for q, ks in _sites(cap))
     with open(SNAPSHOT, "w") as fh:
         json.dump({"sites": sites}, fh, indent=1)
     print(f"froze {len(sites)} join sites -> {SNAPSHOT}")

@@ -43,10 +43,9 @@ from __future__ import annotations
 
 import os
 import re
-import sys
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(ROOT, "tools"))
+import scale_audit as S
+from conftest import ROOT
 
 SMALL = "/root/testdata/sf0.01"
 BIG = "/root/testdata/sf0.1"
@@ -72,7 +71,7 @@ ADAPTIVE_BATCH_OK = {
 # (key, micro-batch) flat across a 10x fixture step, state <= 2.6 KB
 # per key — SCALING.md round 11), gated by the streaming tests. A new
 # entry here must also appear in the executed gate below via its
-# query (run tools/pandas_batch_audit.py).
+# query (run `python tools/scale_audit.py pandas_batch`).
 PANDAS_SURFACE = {
     # grouped-map and cogrouped share the method name; the executed
     # gate below distinguishes them via the spy's own labels
@@ -90,8 +89,9 @@ _API_PATTERNS = {
 }
 
 # The 13 registry queries whose plans reach a pandas batch API
-# (tools/pandas_batch_audit.py --detect-only, r11; quantile_normalize
-# left the surface when its rank moved onto ranks.grouped_min_rank).
+# (`python tools/scale_audit.py pandas_batch --detect-only`, r11;
+# quantile_normalize left the surface when its rank moved onto
+# ranks.grouped_min_rank).
 PANDAS_QUERIES = [
     "cogroup_asof_attribution",
     "groupedmap_zscore",
@@ -142,17 +142,27 @@ def test_pandas_api_surface_is_frozen():
     # here is a one-line fix — strictness beats a silent new site
     assert found == PANDAS_SURFACE, (
         f"pandas batch API surface changed:\n"
-        f"  new sites (measure with tools/pandas_batch_audit.py, then "
-        f"register): {sorted(found - PANDAS_SURFACE)}\n"
+        f"  new sites (measure with `python tools/scale_audit.py "
+        f"pandas_batch`, then register): {sorted(found - PANDAS_SURFACE)}\n"
         f"  stale entries: {sorted(PANDAS_SURFACE - found)}"
     )
 
 
-def test_pandas_batches_bounded(spark):
-    import pandas_batch_audit as P
+def _fired(spark, sf_dir) -> dict:
+    """{query: {(api, site): (invocations, max_rows, max_bytes)}} for
+    every call site that received at least one batch."""
+    cap = S.capture(spark, sf_dir, PANDAS_QUERIES, [S.PandasBatch()], verbose=False)
+    fired = {
+        name: {(api, i): (n, rows, nbytes)
+               for i, (api, n, rows, nbytes) in enumerate(sites) if n}
+        for name, sites in cap["pandas_batch"].items()
+    }
+    return {name: sites for name, sites in fired.items() if sites}
 
-    a = P.capture(spark, SMALL, PANDAS_QUERIES, verbose=False)
-    b = P.capture(spark, BIG, PANDAS_QUERIES, verbose=False)
+
+def test_pandas_batches_bounded(spark):
+    a = _fired(spark, SMALL)
+    b = _fired(spark, BIG)
 
     max_records = int(
         spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
@@ -189,7 +199,7 @@ def test_pandas_batches_bounded(spark):
             if name in ADAPTIVE_BATCH_OK:
                 continue
             xr = a.get(name, {}).get((api, site), (0, 0, 0))[1]
-            if rows > ABS_FLOOR and xr and rows / xr > RATIO_BOUNDED:
+            if xr and S.grows(xr, rows, RATIO_BOUNDED, ABS_FLOOR):
                 violations.append(
                     f"{name} ({api}, site {site}): batch grew {xr} -> "
                     f"{rows} rows ({rows / xr:.1f}x) across a 10x data "

@@ -23,19 +23,13 @@ construction; tests/test_ranks.py pins the property directly).
 
 from __future__ import annotations
 
-import os
-import sys
-
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(ROOT, "tools"))
+import skew_audit
 
 SF_DIR = "/root/testdata/sf0.01"
 THRESHOLD = 3.0
 
 
 def test_range_bucket_occupancy_near_uniform(spark):
-    import skew_audit
-
     rows = skew_audit.audit_rows(spark, SF_DIR)
     # every ranks-based query must fire at least one call site —
     # a silent zero-capture means the spy (or a refactor away from

@@ -5,11 +5,14 @@ cardinality grows with the data: PARTITION BY a bounded key (brand,
 returnflag, event_type) over a data-sized frame funnels N/k rows
 into ONE sort task per group — the same single-task-sort class the
 global-window gates closed for k=1, one notch up. The r11 measured
-audit (tools/window_audit.py, table in SCALING.md) counted every
-partitioned Window node's actual group sizes at two scales and the
+audit (``python tools/scale_audit.py window``, table in SCALING.md)
+counted every partitioned Window node's actual group sizes at two
+scales and the
 18 hazard sites were rewritten onto the grouped two-level
-primitives; this STRUCTURAL gate (plan walk only, no jobs) keeps a
-future edit from reintroducing the shape.
+primitives; this STRUCTURAL gate keeps a future edit from
+reintroducing the shape. It reads the ``window`` probe's structural
+walk (``shape``) and WindowGroupLimit keys (``wgl``) from the
+session-scoped ``scale_capture`` fixture at sf0.001.
 
 A site passes if any of:
 1. its keys include the two-level primitives' own ``__rk_bucket``
@@ -28,29 +31,27 @@ A site passes if any of:
    its input is k rows per group, but it owns no WGL, so counting
    flags it falsely. A query with a rank<=k window and a second
    FULL-ranking window on the same bounded keys would still be
-   wrongly exempted here; the measured audit (tools/
-   window_audit.py, run per round) counts actual group sizes per
-   site and is the backstop that would catch it;
+   wrongly exempted here; the measured audit (``python
+   tools/scale_audit.py window``, run per round) counts actual group
+   sizes per site and is the backstop that would catch it;
 3. any partition key is on the GROWING_KEYS list (cardinality
    scales with the data, so group sizes stay bounded);
 4. a cardinality-reducing node sits below the window (the window
    runs over an O(groups) frame, not raw data) — the same
    approximation the global-window shape gate uses, with the same
-   documented blind spots; tools/window_audit.py is the per-round
-   MEASURED backstop that actually counts rows at two scales;
+   documented blind spots; ``python tools/scale_audit.py window``
+   is the per-round MEASURED backstop that actually counts rows at
+   two scales;
 5. an explicit ALLOWED entry documents why the site is safe.
 """
 
 from __future__ import annotations
 
 import pytest
+from conftest import SCALE_SMALL as SMALL
 # r14 (verdict r13 #2): registry-wide measured audit — deselected from
 # the default (driver-verify) tier; run with -m "slow or not slow".
 pytestmark = pytest.mark.slow
-
-
-import __spark_entry__ as entrymod
-from hivetomysql_spark.plans import introspect as I
 
 # Keys whose distinct-value count grows with the data (verified by
 # the r11 measured audit: groups grew ~10x across the sf0.01->sf0.1
@@ -58,7 +59,7 @@ from hivetomysql_spark.plans import introspect as I
 # sizes bounded as N grows. Caveat measured by the r12 sf1-extended
 # audit: on the DERIVED fixtures the entity-key domains (user_id,
 # o_custkey) are held fixed while facts multiply, so per-entity
-# groups there deepen 10x/step — classified in tools/window_audit.py
+# groups there deepen 10x/step — classified in tools/scale_audit.py
 # as entity-history fan-in (group = one entity's ordered history;
 # 100 TB bound = per-entity retention), not as a plan defect.
 GROWING_KEYS = {
@@ -104,20 +105,19 @@ ALLOWED: dict[tuple[str, tuple[str, ...]], str] = {
         "picks plain window; two-level above (ranks.py r13 census)",
 }
 
-QUERIES = sorted(entrymod.queries())
-
-
 @pytest.fixture(scope="module")
-def site_map(spark):
-    qmap = entrymod.queries()
-    out = {}
-    for name in QUERIES:
-        df = qmap[name](spark, "/root/testdata/sf0.001")
-        sites = I.partitioned_window_keys(df)
-        if sites:
-            wgl = I.partial_window_group_limits(df)
-            out[name] = (sites, wgl)
-    return out
+def site_map(scale_capture):
+    cap = scale_capture[SMALL]
+    failed = {
+        k: v for k, v in cap["failed"].items()
+        if ":" not in k or k.startswith("window:")
+    }
+    assert not failed, f"plan builds / window walks failed: {failed}"
+    return {
+        name: ([(tuple(keys), reduced) for keys, reduced in rec["shape"]],
+               rec["wgl"])
+        for name, rec in cap["window"].items()
+    }
 
 
 def test_no_bounded_key_window_over_raw_data(site_map):
@@ -141,7 +141,7 @@ def test_no_bounded_key_window_over_raw_data(site_map):
                 "is bounded (rewrite onto operators/ranks grouped "
                 "primitives or add a literal rank<=k filter for "
                 "WindowGroupLimit), or add it to GROWING_KEYS/ALLOWED "
-                "with evidence (run tools/window_audit.py)"
+                "with evidence (run `python tools/scale_audit.py window`)"
             )
     assert not violations, "\n".join(violations)
 

@@ -5,10 +5,16 @@ Value-range buckets inherit the key's distribution (ranks.py module
 docstring): a heavy-tailed key concentrates rows in a few buckets and
 partially recreates the single-partition sort the two-level form
 exists to kill. This audit measures the REAL call sites instead of
-guessing: it monkeypatches ``ranks.with_value_buckets`` with a
-recording spy, builds each ranks-based registry query's plan (the
-call sites fire at plan-build time), then computes the actual bucket
-occupancy of every captured bucketed frame at the given scale.
+guessing: it spies on ``ranks.with_value_buckets``, builds each
+ranks-based registry query's plan through the build loop of
+tools/scale_audit.py (the call sites fire at plan-build time), then
+computes the actual bucket occupancy of every captured bucketed frame
+at the given scale.
+
+It is not a probe of that harness's two-scale table: its rule is a
+single-scale occupancy ratio (max/mean), not growth across a step,
+and it forces the two-level branch of every ``dispatch="auto"`` site,
+which changes the plans the other probes would measure.
 
 Usage: python tools/skew_audit.py [SF_DIR] [--threshold R]
 
@@ -30,8 +36,9 @@ sys.path.insert(0, ".")
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from hivetomysql_spark.session import get_spark  # noqa: E402
 import hivetomysql_spark.operators.ranks as ranks  # noqa: E402
+import scale_audit as S  # noqa: E402
+from hivetomysql_spark.session import get_spark  # noqa: E402
 
 # every registry query that routes a global order through
 # operators/ranks (the 13 rewritten in r9 plus the two hand-rolled
@@ -75,6 +82,49 @@ RANKS_QUERIES = [
 ]
 
 
+class Skew(S.Probe):
+    name = "skew"
+
+    def install(self, spark):
+        super().install(spark)
+
+        def bucketed(real, df, key, n_buckets=64, mode="range"):
+            out = real(df, key, n_buckets, mode=mode)
+            self.sites.append((key, mode, out))
+            return out
+
+        self.spy(ranks, "with_value_buckets", bucketed)
+        # Force dispatch="auto" sites onto the two-level branch for the
+        # measurement: the r12 adaptive dispatch picks the PLAIN window
+        # wherever the measured max group fits one sort task (true for
+        # window_rank_ntile at every fixture scale — part is catalog-
+        # bounded), so its bucket site would never fire here and the
+        # audit would lose coverage of exactly the branch this gate
+        # exists to measure. The branch only runs at scales where groups
+        # outgrow the bound, and ITS skew behavior is scale-independent
+        # (bucket boundaries come from the key's min/max), so measuring
+        # it at fixture scale is the honest preview.
+        self.swap(ranks, "PLAIN_WINDOW_BOUND", -1)
+
+    def end(self, df):
+        rows = []
+        for key, mode, bucketed in self.sites:
+            occ = (
+                bucketed.groupBy(ranks.BUCKET)
+                .agg(F.count(F.lit(1)).alias("c"))
+                .agg(
+                    F.sum("c").alias("n"),
+                    F.count(F.lit(1)).alias("used"),
+                    F.max("c").alias("mx"),
+                    F.avg("c").alias("mean"),
+                )
+                .collect()[0]
+            )
+            rows.append((key, mode, int(occ["n"] or 0), int(occ["used"] or 0),
+                         int(occ["mx"] or 0), float(occ["mean"] or 0.0)))
+        return rows
+
+
 def audit_rows(
     spark, sf_dir: str, names: list[str] | None = None
 ) -> list[tuple[str, str, str, int, int, int, float]]:
@@ -82,74 +132,16 @@ def audit_rows(
     given queries make at ``sf_dir``. Returns (query, key, mode, rows,
     buckets_used, max_occ, mean_occ) per captured frame. Importable
     by the pytest gate (tests/test_skew_gate.py) so tool and test
-    share one definition of 'the call sites'."""
-    import __spark_entry__ as entrymod
-
-    qmap = entrymod.queries()
-    captured: list[tuple[str, str, int, object]] = []
-    orig = ranks.with_value_buckets
-
-    def spy(df, key, n_buckets=64, mode="range"):
-        out = orig(df, key, n_buckets, mode=mode)
-        captured.append((key, mode, n_buckets, out))
-        return out
-
-    ranks.with_value_buckets = spy
-    # Force dispatch="auto" sites onto the two-level branch for the
-    # measurement: the r12 adaptive dispatch picks the PLAIN window
-    # wherever the measured max group fits one sort task (true for
-    # window_rank_ntile at every fixture scale — part is catalog-
-    # bounded), so its bucket site would never fire here and the
-    # audit would lose coverage of exactly the branch this gate
-    # exists to measure. The branch only runs at scales where groups
-    # outgrow the bound, and ITS skew behavior is scale-independent
-    # (bucket boundaries come from the key's min/max), so measuring
-    # it at fixture scale is the honest preview.
-    orig_bound = ranks.PLAIN_WINDOW_BOUND
-    ranks.PLAIN_WINDOW_BOUND = -1
-    rows_out = []
-    try:
-        for name in names or RANKS_QUERIES:
-            captured.clear()
-            qmap[name](spark, sf_dir)  # plan build fires the call sites
-            for key, mode, nb, bucketed in captured:
-                occ = (
-                    bucketed.groupBy(ranks.BUCKET)
-                    .agg(F.count(F.lit(1)).alias("c"))
-                    .agg(
-                        F.sum("c").alias("n"),
-                        F.count(F.lit(1)).alias("used"),
-                        F.max("c").alias("mx"),
-                        F.avg("c").alias("mean"),
-                    )
-                    .collect()[0]
-                )
-                rows_out.append(
-                    (
-                        name,
-                        key,
-                        mode,
-                        int(occ["n"] or 0),
-                        int(occ["used"] or 0),
-                        int(occ["mx"] or 0),
-                        float(occ["mean"] or 0.0),
-                    )
-                )
-    finally:
-        ranks.with_value_buckets = orig
-        ranks.PLAIN_WINDOW_BOUND = orig_bound
-    return rows_out
+    share one definition of 'the call sites'. A query whose build
+    fails is reported (``build-failed``) and captures nothing."""
+    cap = S.capture(spark, sf_dir, names or RANKS_QUERIES, [Skew()], verbose=False)
+    return [(name, *row) for name, rows in cap["skew"].items() for row in rows]
 
 
 def main() -> int:
     args = [a for a in sys.argv[1:]]
-    threshold = 3.0
-    if "--threshold" in args:
-        i = args.index("--threshold")
-        threshold = float(args[i + 1])
-        del args[i : i + 2]
+    threshold = float(S.pop_opt(args, "--threshold", 3.0))
     sf_dir = args[0] if args else "/root/testdata/sf0.1"
-
     spark = get_spark(app_name="skew_audit")
     rows_out = audit_rows(spark, sf_dir)
 
