@@ -4,7 +4,7 @@ The reference signals failure classes to its scheduler via process
 exit codes (/root/reference/HiveToMysql.java:64-88 and README.md:30-35):
 
 * 9995 — dump file has no header line
-* 9996 — a data row has fewer fields than a referenced ordinal
+* 9996 — a data row's field count differs from the header's
 * 9997 — a mapped source field is missing from the source schema
 * 9998 — the source produced no data rows (when ``error_if_none_data``)
 * 9999 — any other error
@@ -36,7 +36,8 @@ class MissingHeaderError(EngineError):
 
 
 class RowArityError(EngineError):
-    """Data row shorter than a referenced field ordinal (exit 9996)."""
+    """Data row whose field count differs from the header's (exit
+    9996)."""
 
     exit_code = 9996
 

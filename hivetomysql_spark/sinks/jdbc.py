@@ -34,6 +34,7 @@ Scale notes (100 TB / 1000-executor design):
 from __future__ import annotations
 
 import logging
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
@@ -69,6 +70,18 @@ def build_delete_statement(
     return sql, params
 
 
+def _execute(conn, sql: str, params: Sequence[str] = ()) -> int:
+    """One statement on a JVM JDBC connection, ``?`` parameters bound
+    as strings; returns its update count."""
+    stmt = conn.prepareStatement(sql)
+    try:
+        for i, value in enumerate(params, start=1):
+            stmt.setString(i, value)
+        return stmt.executeUpdate()
+    finally:
+        stmt.close()
+
+
 def delete_before_insert(
     spark,
     conf: DumpConf,
@@ -85,19 +98,41 @@ def delete_before_insert(
         conf.mysql_table, mapping.constant_fields, ident_quote=ident_quote
     )
     log.info("pre-delete: %s params=%s", sql, params)
-    jvm = spark._jvm
-    conn = jvm.java.sql.DriverManager.getConnection(
+    conn = spark._jvm.java.sql.DriverManager.getConnection(
         url or conf.jdbc_url, conf.mysql_user, conf.mysql_password
     )
     try:
-        stmt = conn.prepareStatement(sql)
-        for i, value in enumerate(params, start=1):
-            stmt.setString(i, value)
-        deleted = stmt.executeUpdate()
+        deleted = _execute(conn, sql, params)
         log.info("pre-delete removed %d rows", deleted)
-        stmt.close()
     finally:
         conn.close()
+
+
+def _save_jdbc(
+    df: DataFrame, conf: DumpConf, table: str, mode: str, url: str,
+    url_params, batch_size, max_connections, isolation_level, create_types,
+) -> None:
+    """The distributed JDBC write of ``df`` into ``table``, at most
+    ``max_connections`` tasks wide."""
+    out = df
+    if df.rdd.getNumPartitions() > max_connections:
+        out = df.coalesce(max_connections)
+    writer = (
+        out.write.format("jdbc")
+        .option("url", url + (f"?{url_params}" if url_params else ""))
+        .option("dbtable", table)
+        .option("user", conf.mysql_user)
+        .option("password", conf.mysql_password)
+        .option("batchsize", str(batch_size))
+        .option("isolationLevel", isolation_level)
+    )
+    if create_types:
+        # explicit DDL types when the writer creates the table —
+        # e.g. VARCHAR instead of Derby's default CLOB (CLOB is not
+        # '='-comparable, which would break the pre-delete) or
+        # MySQL's TEXT
+        writer = writer.option("createTableColumnTypes", create_types)
+    writer.mode(mode).save()
 
 
 def write_jdbc(
@@ -116,7 +151,10 @@ def write_jdbc(
 
     ``delete_before_dump`` + constant columns ⇒ idempotent re-runs:
     running the pipeline twice leaves the target in the same state as
-    running it once (reference README.md:22-24).
+    running it once (reference README.md:22-24). A failure during the
+    append, after the pre-delete, leaves the partition partly loaded
+    (module note), so a source's own checks must fail before this
+    runs, as :func:`read_tsv_dump`'s arity pass does.
 
     ``url``/``url_params``/``ident_quote`` default to the reference's
     MySQL target; the Derby integration test overrides them (ANSI
@@ -127,27 +165,10 @@ def write_jdbc(
         delete_before_insert(
             df.sparkSession, conf, mapping, url=url, ident_quote=ident_quote
         )
-    out = df
-    if df.rdd.getNumPartitions() > max_connections:
-        out = df.coalesce(max_connections)
-    base_url = url or conf.jdbc_url
-    url = base_url + (f"?{url_params}" if url_params else "")
-    writer = (
-        out.write.format("jdbc")
-        .option("url", url)
-        .option("dbtable", conf.mysql_table)
-        .option("user", conf.mysql_user)
-        .option("password", conf.mysql_password)
-        .option("batchsize", str(batch_size))
-        .option("isolationLevel", isolation_level)
+    _save_jdbc(
+        df, conf, conf.mysql_table, "append", url or conf.jdbc_url, url_params,
+        batch_size, max_connections, isolation_level, create_table_column_types,
     )
-    if create_table_column_types:
-        # explicit DDL types when the writer creates the table —
-        # e.g. VARCHAR instead of Derby's default CLOB (CLOB is not
-        # '='-comparable, which would break the pre-delete) or
-        # MySQL's TEXT
-        writer = writer.option("createTableColumnTypes", create_table_column_types)
-    writer.mode("append").save()
 
 
 def write_jdbc_staged(
@@ -187,56 +208,30 @@ def write_jdbc_staged(
     work). For multi-TB targets prefer a partitioned target table
     and EXCHANGE PARTITION; same staging shape.
     """
-    spark = df.sparkSession
-    q = ident_quote
     staging = f"{conf.mysql_table}__staging"
     base_url = url or conf.jdbc_url
-    wire_url = base_url + (f"?{url_params}" if url_params else "")
-    out = df
-    if df.rdd.getNumPartitions() > max_connections:
-        out = df.coalesce(max_connections)
-    writer = (
-        out.write.format("jdbc")
-        .option("url", wire_url)
-        .option("dbtable", staging)
-        .option("user", conf.mysql_user)
-        .option("password", conf.mysql_password)
-        .option("batchsize", str(batch_size))
-        .option("isolationLevel", isolation_level)
+    _save_jdbc(
+        df, conf, staging, "overwrite", base_url, url_params,
+        batch_size, max_connections, isolation_level, create_table_column_types,
     )
-    if create_table_column_types:
-        writer = writer.option(
-            "createTableColumnTypes", create_table_column_types
-        )
-    writer.mode("overwrite").save()
-
+    q = ident_quote
     cols = ", ".join(f"{q}{c}{q}" for c in df.columns)
+    keyed = conf.delete_before_dump and mapping is not None
     delete_sql, params = build_delete_statement(
-        conf.mysql_table,
-        mapping.constant_fields if (
-            conf.delete_before_dump and mapping is not None
-        ) else {},
-        ident_quote=ident_quote,
+        conf.mysql_table, mapping.constant_fields if keyed else {}, ident_quote=q
     )
     insert_sql = (
         f"INSERT INTO {conf.mysql_table} ({cols}) "
         f"SELECT {cols} FROM {staging}"
     )
-    jvm = spark._jvm
-    conn = jvm.java.sql.DriverManager.getConnection(
+    conn = df.sparkSession._jvm.java.sql.DriverManager.getConnection(
         base_url, conf.mysql_user, conf.mysql_password
     )
     try:
         conn.setAutoCommit(False)
         try:
-            stmt = conn.prepareStatement(delete_sql)
-            for i, value in enumerate(params, start=1):
-                stmt.setString(i, value)
-            deleted = stmt.executeUpdate()
-            stmt.close()
-            st2 = conn.createStatement()
-            inserted = st2.executeUpdate(insert_sql)
-            st2.close()
+            deleted = _execute(conn, delete_sql, params)
+            inserted = _execute(conn, insert_sql)
             conn.commit()
             log.info(
                 "staged swap: -%d +%d rows in one transaction",
@@ -248,9 +243,7 @@ def write_jdbc_staged(
         finally:
             conn.setAutoCommit(True)
         try:
-            st3 = conn.createStatement()
-            st3.executeUpdate(f"DROP TABLE {staging}")
-            st3.close()
+            _execute(conn, f"DROP TABLE {staging}")
         except Exception as exc:  # noqa: BLE001 - scratch cleanup only
             log.info("staging drop skipped: %s", exc)
     finally:

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hivetomysql_spark.errors import MissingHeaderError
+from hivetomysql_spark.errors import MissingHeaderError, RowArityError
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -115,6 +115,20 @@ def read_jdbc(
     return reader.load()
 
 
+def _conditions(exc: BaseException):
+    """Spark error conditions along ``exc``'s JVM cause chain (PySpark
+    keeps the JVM throwable as ``java_exception`` or ``_origin``; only
+    a ``SparkThrowable`` has a condition)."""
+    jt = getattr(exc, "java_exception", None) or getattr(exc, "_origin", None)
+    try:
+        while jt is not None:
+            if "getCondition" in dir(jt) and (cond := jt.getCondition()):
+                yield cond
+            jt = jt.getCause()
+    except Exception:  # noqa: BLE001 - JVM gone: no more causes
+        return
+
+
 def read_tsv_dump(spark: SparkSession, path: str) -> DataFrame:
     """Read a reference-native Hive TSV dump, all columns as strings.
 
@@ -128,19 +142,36 @@ def read_tsv_dump(spark: SparkSession, path: str) -> DataFrame:
       such line would otherwise surface as a data row, so we filter
       rows where the first column equals its own header name.
     * all-varchar model (README.md:17) — every column StringType.
+    * a row whose field count differs from the header's raises
+      :class:`RowArityError` (437-441, exit 9996; stricter than the
+      reference, which aborts only on a row short of a field the map
+      reads). One eager FAILFAST pass over every column checks it
+      here, before any sink and its pre-delete, as the reference
+      checks arity before its DELETE (256-290); under CSV column
+      pruning a narrower lazy read parses only its own columns.
 
     Raises :class:`MissingHeaderError` (reference exit 9995) when the
     file is empty.
+
+    Known divergence: an unquoted empty field reads as NULL (Spark's
+    CSV reader, whatever ``nullValue`` says), not the reference's ``''``.
     """
     df = (
         spark.read.option("sep", "\t")
         .option("header", "true")
         .option("nullValue", "NULL")
         .option("inferSchema", "false")
+        .option("mode", "FAILFAST")
         .csv(path)
     )
     if not df.columns:
         raise MissingHeaderError(f"no header line in {path}")
+    try:
+        df.write.format("noop").mode("overwrite").save()
+    except Exception as exc:
+        if any(c.startswith("MALFORMED_RECORD_IN_PARSING") for c in _conditions(exc)):
+            raise RowArityError(f"row arity differs from the header in {path}") from exc
+        raise
     # strip "table." prefixes (HiveToMysql.java:532-545)
     stripped = [c.split(".")[-1] for c in df.columns]
     raw_first = df.columns[0]

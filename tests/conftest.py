@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
 import pytest
 
@@ -17,6 +18,25 @@ SF_DIR = "/root/testdata/sf0.001"
 # the cheap scale step every registry-wide slow gate reads
 SCALE_SMALL = "/root/testdata/sf0.001"
 SCALE_BIG = "/root/testdata/sf0.01"
+
+
+def pytest_collection_modifyitems(config, items):
+    """Deselect the ``slow`` gates unless ``-m`` is given or the gate's
+    own file is named on the command line (``pytest tests/test_join_gate.py``
+    runs it; ``pytest tests/`` does not)."""
+    if config.option.markexpr:
+        return
+    named = {
+        Path(config.invocation_params.dir, arg.split("::")[0]).resolve()
+        for arg in config.args
+    }
+    keep, slow = [], []
+    for item in items:
+        fast = item.get_closest_marker("slow") is None
+        (keep if fast or item.path.resolve() in named else slow).append(item)
+    if slow:
+        config.hook.pytest_deselected(items=slow)
+        items[:] = keep
 
 
 @pytest.fixture(scope="session")

@@ -59,6 +59,19 @@ def test_cli_tsv_to_parquet_success(tmp_path):
     ]
 
 
+def test_cli_empty_dump_exit_9995(tmp_path):
+    conf = write_fixture(tmp_path, tsv="")
+    assert run_cli(conf).returncode == 9995 % 256
+
+
+def test_cli_short_row_exit_9996(tmp_path):
+    # the map reads only event_type, which the short row has
+    conf = write_fixture(
+        tmp_path, map_text="etype=event_type\n", tsv=TSV + "4\tclick\n"
+    )
+    assert run_cli(conf).returncode == 9996 % 256
+
+
 def test_cli_missing_field_exit_9997(tmp_path):
     conf = write_fixture(
         tmp_path,
@@ -90,3 +103,30 @@ def test_cli_unknown_error_exit_9999(tmp_path):
     conf.write_text("source_format=bogus\n")
     (tmp_path / "dump.map").write_text(MAP_TEXT)
     assert run_cli(conf).returncode == 9999 % 256
+
+
+def test_cli_short_row_reimport_keeps_target_rows(spark, tmp_path):
+    """A re-import whose dump has a short row exits 9996 before the
+    JDBC pre-delete: the target keeps the partition's rows from the
+    good load, and no row of the bad dump is appended (in-process,
+    against embedded Derby)."""
+    from hivetomysql_spark.__main__ import main
+    from hivetomysql_spark.sources import read_jdbc
+
+    url = f"jdbc:derby:{tmp_path}/derbydb;create=true"
+    jdbc = (
+        "sink_format=jdbc\nmysql_table=app_cli\n"
+        f"jdbc_url={url}\njdbc_url_params=\njdbc_ident_quote=\"\n"
+    )
+    # the pre-delete compares ds and version, which a CLOB cannot be
+    types = "ds VARCHAR(20), version VARCHAR(20)"
+    conf = write_fixture(tmp_path, conf_extra=jdbc + f"jdbc_create_types={types}\n")
+    assert main([str(conf)]) == 0
+    conf = write_fixture(
+        tmp_path,
+        conf_extra=jdbc + "delete_before_dump=true\n",
+        tsv=TSV + "4\tclick\n",
+    )
+    assert main([str(conf)]) == 9996
+    back = read_jdbc(spark, url.replace(";create=true", ""), "app_cli")
+    assert sorted(r.etype for r in back.collect()) == ["click", "purchase", "view"]

@@ -63,62 +63,3 @@ def test_hive_partitioned_read_with_ds_pruning(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert "HIVE_SOURCE_OK" in proc.stdout
-
-
-def test_hivedump_writer_roundtrip(spark, tmp_path):
-    """The engine EMITS the reference's dump format: write a frame
-    with NULLs through format('hivedump'), read it back through the
-    same format, and recover identical rows — interop in both
-    directions with the reference's staging files."""
-    from pyspark.sql import Row
-
-    from hivetomysql_spark.sources.hivedump_datasource import (
-        HiveDumpDataSource,
-    )
-
-    spark.dataSource.register(HiveDumpDataSource)
-    df = spark.createDataFrame(
-        [
-            Row(a="x", b="1", c=None),
-            Row(a="NULLISH", b=None, c="z"),
-            Row(a="", b="2", c="w"),
-        ]
-    )
-    out = str(tmp_path / "dump_out")
-    df.write.format("hivedump").mode("overwrite").option(
-        "path", out
-    ).save()
-    back = (
-        spark.read.format("hivedump").option("path", out).load()
-    )
-    assert sorted(map(tuple, back.collect())) == sorted(
-        map(tuple, df.collect())
-    )
-    # the files are byte-compatible with the reference's protocol:
-    # header first, literal NULL text for SQL NULL
-    import glob as g
-
-    files = sorted(g.glob(out + "/*.dump"))
-    assert files
-    text = "".join(open(f).read() for f in files)
-    assert "NULL" in text
-    first_lines = {open(f).readline().rstrip("\n") for f in files}
-    assert first_lines == {"a\tb\tc"}
-
-
-def test_hivedump_writer_rejects_tabs(spark, tmp_path):
-    """The reference's line protocol has no escaping
-    (HiveToMysql.java:366 splits blindly); the writer refuses values
-    it cannot represent instead of corrupting the file."""
-    import pytest as pt
-
-    from hivetomysql_spark.sources.hivedump_datasource import (
-        HiveDumpDataSource,
-    )
-
-    spark.dataSource.register(HiveDumpDataSource)
-    df = spark.createDataFrame([("a\tb",)], ["x"])
-    with pt.raises(Exception, match="tab|newline|hivedump"):
-        df.write.format("hivedump").mode("overwrite").option(
-            "path", str(tmp_path / "bad")
-        ).save()

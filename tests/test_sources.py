@@ -1,9 +1,13 @@
-"""Extension-tier source readers: CSV / JSON round-trips and the rate
-streaming source (SURVEY.md §2.2 "Scans/sources beyond Hive-CLI")."""
+"""Source readers: the reference's TSV dump (``read_tsv_dump``),
+extension-tier CSV / JSON round-trips and the rate streaming source
+(SURVEY.md §2.2 "Scans/sources beyond Hive-CLI")."""
 
 from __future__ import annotations
 
-from hivetomysql_spark.sources import read_csv, read_json, read_orc
+import pytest
+
+from hivetomysql_spark.errors import RowArityError, to_exit_code
+from hivetomysql_spark.sources import read_csv, read_json, read_orc, read_tsv_dump
 from hivetomysql_spark.tables import load_table
 
 
@@ -118,12 +122,10 @@ def test_xml_roundtrip(spark, sf_dir, tmp_path):
     assert got == orig and len(got) > 0
 
 
-def test_hivedump_python_datasource(spark, tmp_path):
-    """The reference's TSV dump format as a Spark 4 Python
-    DataSource: table-prefix stripping, NULL literal, mid-file header
-    echo filtering, per-file partitions."""
-    from hivetomysql_spark.sources.hivedump_datasource import HiveDumpDataSource
-
+def test_tsv_dump_directory(spark, tmp_path):
+    """The reference's TSV dump format over a directory of dumps:
+    table-prefix stripping, NULL literal, a header per file and a
+    mid-file header echo filtered out."""
     d = tmp_path / "dumps"
     d.mkdir()
     header = "events.event_id\tevents.etype\tevents.val"
@@ -131,25 +133,50 @@ def test_hivedump_python_datasource(spark, tmp_path):
         f"{header}\n1\tclick\t10\n{header}\n2\tview\tNULL\n"
     )
     (d / "part2.data").write_text(f"{header}\n3\tbuy\t7\n")
-    spark.dataSource.register(HiveDumpDataSource)
-    df = spark.read.format("hivedump").load(str(d))
+    df = read_tsv_dump(spark, str(d))
     assert df.columns == ["event_id", "etype", "val"]
-    assert df.rdd.getNumPartitions() == 2
     rows = {(r.event_id, r.etype, r.val) for r in df.collect()}
     assert rows == {("1", "click", "10"), ("2", "view", None), ("3", "buy", "7")}
 
 
-def test_hivedump_datasource_arity_error(spark, tmp_path):
-    """Arity mismatches are fatal, mirroring reference exit 9996."""
-    import pytest
+def _dump_with(tmp_path, row: str) -> str:
+    """A three-column dump with ``row`` between two well-formed rows."""
+    f = tmp_path / "dump.data"
+    f.write_text(f"t.a\tt.b\tt.c\n1\t2\t3\n{row}\n4\t5\t6\n")
+    return str(f)
 
-    from hivetomysql_spark.sources.hivedump_datasource import HiveDumpDataSource
 
-    f = tmp_path / "bad.data"
-    f.write_text("a\tb\n1\t2\n3\n")
-    spark.dataSource.register(HiveDumpDataSource)
-    with pytest.raises(Exception, match="expected 2 fields|ArityError|PythonException"):
-        spark.read.format("hivedump").load(str(f)).collect()
+@pytest.mark.parametrize("pruning", ["true", "false"], ids=["pruned", "unpruned"])
+@pytest.mark.parametrize("row", ["7\t8", "7\t8\t9\t10"], ids=["short", "long"])
+def test_tsv_dump_row_arity_fails(spark, tmp_path, row, pruning):
+    """A row one field short or long fails the read itself (reference
+    exit 9996), before any projection or sink, whether or not the
+    session prunes CSV columns."""
+    key = "spark.sql.csv.parser.columnPruning.enabled"
+    spark.conf.set(key, pruning)
+    try:
+        with pytest.raises(RowArityError) as err:
+            read_tsv_dump(spark, _dump_with(tmp_path, row))
+    finally:
+        spark.conf.unset(key)
+    assert to_exit_code(err.value) == 9996
+
+
+@pytest.mark.parametrize("cols", [["a"], ["a", "b", "c"]], ids=["one_column", "all_columns"])
+def test_tsv_dump_well_formed_passes(spark, tmp_path, cols):
+    """Every row at the header's arity reads, a fully quoted field
+    with an embedded tab as one value."""
+    df = read_tsv_dump(spark, _dump_with(tmp_path, '7\t"8\t8"\t9')).select(*cols)
+    want = [("1", "2", "3"), ("7", "8\t8", "9"), ("4", "5", "6")]
+    assert sorted(map(tuple, df.collect())) == sorted(r[: len(cols)] for r in want)
+
+
+def test_tsv_dump_empty_field_reads_null(spark, tmp_path):
+    """Pinned divergence from the reference, whose only null rule is
+    the literal ``NULL``: Spark's CSV reader reads an unquoted empty
+    field as NULL, not ``''``."""
+    df = read_tsv_dump(spark, _dump_with(tmp_path, "7\t\t9"))
+    assert ("7", None, "9") in set(map(tuple, df.collect()))
 
 
 def test_csv_corrupt_record_modes(spark, tmp_path):
@@ -158,7 +185,6 @@ def test_csv_corrupt_record_modes(spark, tmp_path):
     continue), FAILFAST raises — the reader-level analogue of the
     reference's fatal row-arity contract (HiveToMysql.java:437-441,
     exit 9996)."""
-    import pytest
     from pyspark.sql.utils import PythonException  # noqa: F401
 
     f = tmp_path / "rows.csv"
